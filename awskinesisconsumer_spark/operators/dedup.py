@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from .caching import release_after as _release_after
 
@@ -142,16 +142,136 @@ def minhash_signature(df: DataFrame, *, id_col: str, shingle_col: str,
                               out_col=out_col)
 
 
+def _perm_coeffs(num_hashes: int) -> list[tuple[int, int]]:
+    """The minhash permutation family: permutation i maps a base hash h
+    to (h*a_i + b_i) mod _MERSENNE with (a_i, b_i) = (2i+1, 7919*(i+1)).
+    Single source of truth for the groupBy aggregates
+    (`_perm_min_aggs`) and the Arrow signature kernel
+    (`_signature_kernel`), so their signatures are bit-identical."""
+    return [(2 * i + 1, 7919 * (i + 1)) for i in range(num_hashes)]
+
+
 def _perm_min_aggs(num_hashes: int) -> list:
-    """The minhash permutation family as groupBy aggregates: for each i,
-    min over the doc's base hashes `_h` of (h*(2i+1) + 7919*(i+1)) mod
-    _MERSENNE, aliased `_m{i}`. Single source of truth so banded-LSH
-    signatures stay bit-identical to `minhash_signature` ones."""
+    """The permutation family as groupBy aggregates: for each i, min
+    over the group's base hashes `_h` of permutation i, aliased
+    `_m{i}`."""
     return [
-        F.min((F.col("_h") * F.lit(2 * i + 1) + F.lit(7919 * (i + 1))) % _MERSENNE)
-        .alias(f"_m{i}")
-        for i in range(num_hashes)
+        F.min((F.col("_h") * F.lit(a) + F.lit(b)) % _MERSENNE).alias(f"_m{i}")
+        for i, (a, b) in enumerate(_perm_coeffs(num_hashes))
     ]
+
+
+# Bit offset of the permutation index in an encoded signature
+# component: component i of a kernel signature is (i << 31) | m_i.
+# m_i < _MERSENNE < 2^31, so the value never spills into the index,
+# and two components are equal only when position AND value agree.
+_POS_SHIFT = 31
+
+
+def _signature_kernel(num_hashes: int):
+    """mapInArrow kernel: (id, _h) rows -> (id, _sig) with _sig the
+    ENCODED signature [(i << 31) | m_i], m_i = min over the run's base
+    hashes of permutation i of `_perm_coeffs`.
+
+    One signature per RUN of equal adjacent ids. `shingle_rows`
+    explodes each input row in place, so a document's rows arrive
+    adjacent in one partition; only an Arrow batch boundary can split
+    a run, and the kernel carries each batch's last run into the next
+    batch. An id spread over several input rows still yields several
+    runs — the caller merges those (`_merge_partial_signatures`)."""
+    coeffs = _perm_coeffs(num_hashes)
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        a, b = np.array(coeffs, dtype=np.int64).T
+        tag = np.arange(num_hashes, dtype=np.int64) << _POS_SHIFT
+        names = None
+
+        def emit(ids, sig):
+            flat = pa.array((sig | tag).ravel())
+            offsets = pa.array(np.arange(0, len(flat) + 1, num_hashes,
+                                         dtype=np.int32))
+            return pa.RecordBatch.from_arrays(
+                [ids, pa.ListArray.from_arrays(offsets, flat)], names=names
+            )
+
+        carry_id = carry_sig = None
+        for batch in batches:
+            n_rows = batch.num_rows
+            if n_rows == 0:
+                continue
+            names = [batch.schema.names[0], "_sig"]
+            ids = batch.column(0)
+            # (num_hashes, n_rows): the per-run min then reduces along
+            # contiguous memory, ~10x faster than along axis 0.
+            perm = a[:, None] * batch.column(1).to_numpy()
+            perm += b[:, None]
+            perm %= _MERSENNE
+            new_run = np.ones(n_rows, dtype=bool)
+            if n_rows > 1:
+                new_run[1:] = pc.not_equal(
+                    ids.slice(1), ids.slice(0, n_rows - 1)
+                ).to_numpy(zero_copy_only=False)
+            starts = np.flatnonzero(new_run)
+            sig = np.minimum.reduceat(perm, starts, axis=1).T
+            run_ids = ids.take(pa.array(starts))
+            if carry_id is not None:
+                if run_ids[0].as_py() == carry_id[0].as_py():
+                    np.minimum(sig[0], carry_sig, out=sig[0])
+                else:
+                    yield emit(carry_id, carry_sig[None, :])
+            last = len(starts) - 1
+            if last:
+                yield emit(run_ids.slice(0, last), sig[:last])
+            carry_id, carry_sig = run_ids.slice(last, 1), sig[last]
+        if carry_id is not None:
+            yield emit(carry_id, carry_sig[None, :])
+
+    return kernel
+
+
+def _kernel_partial_signatures(rows: DataFrame, *, id_col: str,
+                               num_hashes: int) -> DataFrame:
+    """(id, _h) shingle-hash rows -> (id_col, _sig) encoded signatures,
+    one per run of adjacent rows (`_signature_kernel`), in the input's
+    partitioning. Rows with a null id are dropped (a null id can never
+    satisfy the pair predicate id_a < id_b)."""
+    schema = StructType([
+        StructField(id_col, rows.schema[id_col].dataType, nullable=False),
+        StructField("_sig", ArrayType(LongType(), containsNull=False),
+                    nullable=False),
+    ])
+    return (
+        rows.select(id_col, "_h").where(F.col(id_col).isNotNull())
+        .mapInArrow(_signature_kernel(num_hashes), schema)
+    )
+
+
+def _has_repeated_ids(df: DataFrame, id_col: str) -> bool:
+    """True when some id occurs in more than one row of `df`."""
+    return not (
+        df.groupBy(id_col).count().where(F.col("count") > 1).isEmpty()
+    )
+
+
+def _merge_partial_signatures(parts: DataFrame, *, id_col: str,
+                              num_hashes: int) -> DataFrame:
+    """Fold the kernel's per-run signatures into one per id: the
+    element-wise min, so an id spread over several input rows gets the
+    signature of the UNION of its shingles (the groupBy semantics of
+    `minhash_signature`). The shuffle carries one signature row per
+    run, never shingle rows. An id's k runs flatten to k*num_hashes
+    encoded values whose sort puts position i's k candidates at
+    [i*k, (i+1)*k), smallest first, so every k-th element is the
+    merged component (k = 1 keeps the signature as it is)."""
+    flat = F.flatten(F.collect_list("_sig"))
+    k = (F.size(flat) / F.lit(num_hashes)).cast("int")
+    return parts.groupBy(id_col).agg(
+        F.filter(F.array_sort(flat), lambda _, j: j % k == 0).alias("_sig")
+    )
 
 
 def _minhash_from_rows(ex: DataFrame, *, id_col: str, num_hashes: int,
@@ -271,75 +391,72 @@ def dedup_minhash_lsh(
     """Near-dup candidate pairs via banded MinHash LSH.
 
     shingle -> minhash -> split signature into `bands` bands ->
-    self-join on (band_index, band_hash) -> verify candidates with the
-    exact signature-estimated Jaccard. The band join is an equi-join on
-    a hash key, so it shuffles candidates only — never the O(n²)
-    cross product. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
+    self-join on the band key -> verify candidates with the exact
+    signature-estimated Jaccard. The band join is an equi-join on the
+    band key, so it shuffles candidates only — never the O(n²) cross
+    product. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     """
     rows_per_band = num_hashes // bands
     rows = shingle_rows(
         df.select(id_col, text_col), id_col=id_col, text_col=text_col, n=n
     ).withColumn("_h", F.pmod(hash_fn(F.col("shingle")), F.lit(_MERSENNE)))
-    # One groupBy carries the whole signature as flat _m columns (the
-    # hot codegen'd path over every shingle row), then the signature
-    # immediately COLLAPSES to a single array column. Everything
-    # downstream — banding, the band join, the verify join — sees a
-    # 2-column schema instead of 1 + num_hashes attributes. That
-    # matters twice: Catalyst analysis cost grows superlinearly with
-    # attribute count through self-joins (measured: the flat-column
-    # formulation spent 17 s ANALYZING vs 0.5 s executing at sf0.1),
-    # and the band shuffle rows stay narrow. Docs with zero shingles
-    # have no rows here, so every _m is non-null.
-    # Band hashes are FUSED into the same projection that packs the
-    # signature array: both read the flat _m aggregate columns inside
-    # one whole-stage-codegen span, so banding downstream is a pure
-    # explode of a precomputed array — no second pass recomputing 16
-    # concat+hash keys over the persisted signatures.
+    # Plan width is the cost here, not data. On a ~1k-doc corpus
+    # (local[4]) the previous shape — num_hashes flat `min`
+    # aggregates, one concat_ws+hash band key per band, a
+    # num_hashes-term element_at sum in the verify — ran 19 jobs /
+    # 484 tasks per call and spent 7.7-8.9 CPU-s deserializing task
+    # binaries (~16 ms each) plus ~2.4 s of driver planning, both of
+    # which scale with the expression count every task carries. Now
+    # one Arrow kernel computes the signatures from the narrow
+    # (id, _h) rows without shuffling them (a document's rows are
+    # adjacent, see `_signature_kernel`): 16 jobs / 140 tasks,
+    # ~0.9 CPU-s of deserialization. Docs with zero shingles have no
+    # rows here, so they get no signature and never pair.
+    # The cache holds the kernel output in the INPUT's partitioning,
+    # so every downstream scan runs one task per input partition.
+    # Only an id spread over several input rows needs the merge
+    # shuffle; one small id-count job (which also fills the cache)
+    # finds out, and unique-id input skips the merge. Merging
+    # unconditionally cost ~1 s per call on the same corpus: an
+    # exchange over a cached scan is not reused, so each of the merge's
+    # consumers shuffled the signatures again.
+    parts = _kernel_partial_signatures(
+        rows, id_col=id_col, num_hashes=num_hashes
+    ).persist()
     sigs = (
-        rows.groupBy(id_col)
-        .agg(*_perm_min_aggs(num_hashes))
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-            .alias("_sig"),
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    hash_fn(F.concat_ws(
-                        ",", *[F.col(f"_m{b * rows_per_band + r}")
-                               for r in range(rows_per_band)]
-                    )).alias("band_hash"),
-                )
-                for b in range(bands)
-            ]).alias("_bands"),
-        )
+        _merge_partial_signatures(parts, id_col=id_col, num_hashes=num_hashes)
+        if _has_repeated_ids(parts, id_col) else parts
     )
-    sigs = sigs.persist()  # used 3x: banding + both sides of the verify join
 
-    banded = (
-        sigs.select(F.col(id_col), F.explode("_bands").alias("bk"))
-        .select(id_col, "bk.band", "bk.band_hash")
+    # Each component carries its position ((i << 31) | m_i), so a band
+    # key is a plain slice of the signature: equal slices <=> equal
+    # band AND equal minima. No band index column, no second hash.
+    banded = sigs.select(
+        F.col(id_col),
+        F.explode(F.array(*[
+            F.slice("_sig", b * rows_per_band + 1, rows_per_band)
+            for b in range(bands)
+        ])).alias("_bk"),
     )
 
     # Skew guard: a pathological bucket of m docs yields m^2 candidate
     # pairs — cap bucket size (hot buckets carry no dedup signal worth
     # a quadratic blowup; standard LSH practice at scale).
     hot = (
-        banded.groupBy("band", "band_hash").count()
-        .where(F.col("count") > 200).select("band", "band_hash")
+        banded.groupBy("_bk").count()
+        .where(F.col("count") > 200).select("_bk")
     )
-    banded = banded.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
+    banded = banded.join(F.broadcast(hot), "_bk", "left_anti")
 
     # Candidate pairs: narrow (id_a, id_b) rows only — signatures are
-    # re-attached after dedup so the band shuffle never carries arrays.
+    # re-attached after dedup so the band shuffle never carries them.
     left = banded.alias("l")
     right = banded.alias("r")
     cand = (
         left.join(
             right,
             on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
+                F.col("l._bk") == F.col("r._bk"),
                 F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
             ],
         )
@@ -350,30 +467,21 @@ def dedup_minhash_lsh(
         .distinct()
     )
     # Verify: estimated Jaccard = fraction of matching permutation
-    # minima. Two costs pull in opposite directions here: wide FLAT
-    # signature columns keep the comparison codegen'd but blow up
-    # Catalyst analysis through the self-joins (measured 17 s of
-    # analysis at num_hashes=64), while a zip_with/filter lambda keeps
-    # the schema narrow but evaluates INTERPRETED per candidate pair
-    # (measured 2x wall at 200k docs / ~4M near-dup pairs). The
-    # element_at sum gets both: the join schemas stay (id, _sig) —
-    # analysis sees 2 attributes — and element_at is a codegen'd
-    # scalar expression, so the per-pair comparison stays JIT'd.
+    # minima. Encoded components are distinct within a signature and
+    # equal across two only at the same position with the same
+    # minimum, so the match count is one codegen'd set intersection
+    # — a single expression where the previous shape carried a
+    # num_hashes-term element_at sum in every verify task.
     sig_a = sigs.select(F.col(id_col).alias("id_a"), F.col("_sig").alias("_sa"))
     sig_b = sigs.select(F.col(id_col).alias("id_b"), F.col("_sig").alias("_sb"))
-    n_match = sum(
-        F.when(
-            F.element_at("_sa", i + 1) == F.element_at("_sb", i + 1), 1
-        ).otherwise(0)
-        for i in range(num_hashes)
-    )
+    n_match = F.size(F.array_intersect("_sa", "_sb"))
     out = (
         cand.join(sig_a, "id_a").join(sig_b, "id_b")
         .withColumn("est_jaccard", F.round(n_match / F.lit(num_hashes), 4))
         .where(F.col("est_jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    return _release_after(out, sigs)
+    return _release_after(out, parts)
 
 
 def simhash(df: DataFrame, *, text_col: str, id_col: str, bits: int = 64,

@@ -309,3 +309,40 @@ def test_kmeans_refine_reduces_inertia(spark):
     # one centroid per blob, near each blob mean
     cs = sorted(refined)
     assert abs(cs[0][0] - 0.2) < 0.5 and abs(cs[1][0] - 10.2) < 0.5
+
+
+def test_semantic_dedup_apply_ignores_unrelated_rn_column(spark):
+    """Regression: a caller's reps table may carry any column,
+    including one named `_rn` (a common row_number alias). Only the
+    column `semantic_dedup_prepare_reps` writes may stand in for the
+    rep norm; anything else must not change the cosines."""
+    import math
+
+    from awskinesisconsumer_spark.operators.similarity import (
+        semantic_dedup_apply, semantic_dedup_prepare_reps,
+    )
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.8, 0.6]), (3, [0.1, 1.0]),
+         (4, [0.0, 2.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    reps = spark.createDataFrame(
+        [(0, 10, [1.0, 0.1]), (1, 11, [0.2, 1.0])],
+        "cell int, rep_id bigint, rep_vec array<double>",
+    )
+    kw = dict(id_col="vec_id", vec_col="embedding",
+              centroids=[[1.0, 0.0], [0.0, 1.0]], threshold=0.9)
+
+    def cosines(r):
+        out = semantic_dedup_apply(emb, reps=r, **kw)
+        return {row.vec_id: row.max_rep_cosine for row in out.collect()}
+
+    want = cosines(reps)
+    rep_vec = {10: [1.0, 0.1], 11: [0.2, 1.0]}
+    for vid, vec, rid in [(1, [1.0, 0.0], 10), (4, [0.0, 2.0], 11)]:
+        dot = sum(a * b for a, b in zip(vec, rep_vec[rid]))
+        norms = math.hypot(*vec) * math.hypot(*rep_vec[rid])
+        assert want[vid] == pytest.approx(dot / norms, abs=1e-6)
+    assert cosines(reps.withColumn("_rn", F.lit(1000.0))) == want
+    assert cosines(semantic_dedup_prepare_reps(reps)) == want

@@ -54,6 +54,21 @@ def test_minhash_has_no_cartesian_and_bounded_exchanges(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_minhash_plan_stays_narrow(spark):
+    # Every task binary carries the plan's expressions, and on small
+    # corpora their deserialization and planning dominated the call:
+    # signatures come from one Arrow kernel and the verify is one
+    # array intersection, never one `min` aggregate or one element_at
+    # per hash (ext-dedup-minhash runs num_hashes=32).
+    num_hashes = 32
+    df = entry.queries()["ext-dedup-minhash"](spark, SF)
+    plan = _plan(df)
+    df.unpersist()
+    assert "MapInArrow" in plan
+    assert plan.count("min(") < num_hashes
+    assert plan.count("element_at(") < num_hashes
+
+
 def test_range_join_is_equi_join_not_nested_loop(spark):
     # The bucketed interval join must plan as a hash equi-join on the
     # bucket key — never the quadratic BroadcastNestedLoop/Cartesian
